@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 
 from ..operators.funnel import funnel_steps
 from ..operators.text import hash_bucket_sql
-from .util import load, multiset_diff_count, stream_scratch
+from .util import (
+    assert_multiset_equal,
+    load,
+    replay_input,
+    replay_to_memory,
+    stagger_replay_mtimes,
+)
 
 
 # --------------------------------------------------------------------------
@@ -1769,13 +1775,7 @@ FROM a
 # longs; output is segment-grained no matter the customer count.
 # --------------------------------------------------------------------------
 def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.stateful import flag_counter_stream
-    from .util import replay_input, stagger_replay_mtimes
 
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("seg")
@@ -1810,41 +1810,20 @@ def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         stagger_replay_mtimes(f"{w}/in")
 
     data = replay_input(spark, sf_dir, "q279", _write)
-    work = stream_scratch("q279_")
     stream = (
         spark.readStream.schema("seg string, y long, ts timestamp")
         .option("maxFilesPerTrigger", "1")  # three real micro-batches
         .parquet(f"{data}/in")
     )
-    name = f"out_{_os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            flag_counter_stream(stream, ["seg"], flag_col="y")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q279 streaming replay timed out after 600 s")
-        snap = spark.table(name).collect()
-        mx: dict[str, int] = {}
-        fin: dict[str, tuple] = {}
-        for r in snap:
-            if r.n_processed >= mx.get(r.seg, -1):
-                mx[r.seg] = r.n_processed
-                fin[r.seg] = (r.n, r.k)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
+    snap = replay_to_memory(
+        spark, flag_counter_stream(stream, ["seg"], flag_col="y"), "q279_"
+    ).collect()
+    mx: dict[str, int] = {}
+    fin: dict[str, tuple] = {}
+    for r in snap:
+        if r.n_processed >= mx.get(r.seg, -1):
+            mx[r.seg] = r.n_processed
+            fin[r.seg] = (r.n, r.k)
     streamed = spark.createDataFrame(
         sorted((s, n, k) for s, (n, k) in fin.items()),
         "seg string, n long, k long",
@@ -1854,14 +1833,9 @@ def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.sum("y").alias("k"))
         .localCheckpoint(eager=False)  # gate side + emission
     )
-    # multiset-equality gate in ONE job (round-12): same predicate the
-    # two-exceptAll form tested, one shuffle instead of four
-    n_diff = multiset_diff_count(streamed, batch)
-    if n_diff:
-        raise AssertionError(
-            f"q279: streaming Wilson counters diverged from the batch "
-            f"count/sum on {n_diff} rows - refusing to emit either result"
-        )
+    assert_multiset_equal(
+        streamed, batch, "q279: streaming Wilson counters vs batch count/sum"
+    )
     z = F.lit(WILSON_Z)
     n = F.col("n").cast("double")
     p = F.col("k").cast("double") / n
@@ -1917,13 +1891,7 @@ GK_STREAM_EPS = 0.01
 
 
 def q289_stream_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.stateful import gk_quantile_stream
-    from .util import replay_input, stagger_replay_mtimes
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
@@ -1942,54 +1910,27 @@ def q289_stream_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         stagger_replay_mtimes(f"{w}/in")
 
     data = replay_input(spark, sf_dir, "q289", _write)
-    work = stream_scratch("q289_")
     stream = (
         spark.readStream.schema("grp string, cents long, ts timestamp")
         .option("maxFilesPerTrigger", "1")  # three real micro-batches
         .parquet(f"{data}/in")
     )
-    name = f"out_{_os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            gk_quantile_stream(
-                stream, ["grp"], value_col="cents", eps=GK_STREAM_EPS
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q289 streaming replay timed out after 600 s")
-        snap = spark.table(name).collect()
-        mx: dict[str, int] = {}
-        fin: dict[str, tuple] = {}
-        for r in snap:
-            if r.n_processed >= mx.get(r.grp, -1):
-                mx[r.grp] = r.n_processed
-                fin[r.grp] = (r.n, r.a50, r.a95)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
+    sketch = gk_quantile_stream(stream, ["grp"], value_col="cents", eps=GK_STREAM_EPS)
+    snap = replay_to_memory(spark, sketch, "q289_").collect()
+    mx: dict[str, int] = {}
+    fin: dict[str, tuple] = {}
+    for r in snap:
+        if r.n_processed >= mx.get(r.grp, -1):
+            mx[r.grp] = r.n_processed
+            fin[r.grp] = (r.n, r.a50, r.a95)
     streamed = spark.createDataFrame(
         sorted((g, n) for g, (n, _a, _b) in fin.items()),
         "grp string, n long",
     )
     batch_n = o.groupBy("grp").agg(F.count("*").alias("n"))
-    n_diff = multiset_diff_count(streamed, batch_n)
-    if n_diff:
-        raise AssertionError(
-            f"q289: streaming GK carried counts diverged from the batch "
-            f"counts on {n_diff} rows - refusing to emit either result"
-        )
+    assert_multiset_equal(
+        streamed, batch_n, "q289: streaming GK carried counts vs batch counts"
+    )
     probes = spark.createDataFrame(
         sorted((g, a, b) for g, (_n, a, b) in fin.items()),
         "grp string, a50 long, a95 long",

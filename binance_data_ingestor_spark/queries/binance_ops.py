@@ -31,7 +31,14 @@ from ..operators.projections import (
     with_envelope_json,
 )
 from ..operators.partitioning import fanout, with_row_context
-from .util import load, multiset_diff_count, session_artifact, stream_scratch
+from .util import (
+    assert_multiset_equal,
+    load,
+    replay_input,
+    replay_to_memory,
+    session_artifact,
+    stagger_replay_mtimes,
+)
 
 SYMBOLS = ["BTCUSDT", "ETHUSDT", "SOLUSDT"]
 
@@ -1405,16 +1412,10 @@ VPIN_STREAM_V = 5_000_000  # cents of volume per bucket (fixed contract)
 
 
 def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from ..operators.partitioning import with_global_cumsum
     from ..streaming.stateful import vpin_stream
-    from .util import replay_input
 
     t = (
         _trades_cents(spark, sf_dir, keep=("symbol", "event_id"))
@@ -1445,7 +1446,6 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("qc"),
         F.lit(0).cast("long").alias("bq"),
     )
-    from .util import stagger_replay_mtimes
 
     def _write(w: str) -> None:
         # range-partitioned by ts + STAGGERED part mtimes so replay
@@ -1466,7 +1466,6 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         stagger_replay_mtimes(f"{w}/in")
 
     data = replay_input(spark, sf_dir, "q251", _write)
-    work = stream_scratch("q251_")
     stream = (
         spark.readStream.schema(
             "symbol string, ts timestamp, event_id long, qc long, bq long"
@@ -1474,46 +1473,14 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "2")  # two real micro-batches
         .parquet(f"{data}/in")
     )
-    name = f"out_{_os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # The tail bucket flushes only when the watermark passes the
-    # punctuation sentinel, and after the LAST file that advance can
-    # only happen in a no-data micro-batch. That behavior is an
-    # ambient default (true) — pin it explicitly so the certificate
-    # cannot start failing with a 600 s timeout if a session ever
-    # disables it (round-8 advice item).
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    # the tail bucket flushes only in the no-data micro-batch after the
+    # last file; replay_to_memory pins that flag on for the replay
+    sink = replay_to_memory(spark, vpin_stream(stream, VPIN_STREAM_V), "q251_")
+    streamed = spark.createDataFrame(
+        [r for r in sink.collect() if r.symbol != "__WM_PUSH__"],
+        "symbol string, bucket long, n_trades long, "
+        "buy_vol long, sell_vol long",
     )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        q = (
-            vpin_stream(stream, VPIN_STREAM_V)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q251 streaming replay timed out after 600 s")
-        streamed = spark.createDataFrame(
-            [r for r in spark.table(name).collect()
-             if r.symbol != "__WM_PUSH__"],
-            "symbol string, bucket long, n_trades long, "
-            "buy_vol long, sell_vol long",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
 
     cum = with_global_cumsum(
         t,
@@ -1539,12 +1506,9 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeds the one-job multiset gate AND the emitted result
         .localCheckpoint(eager=False)
     )
-    n_diff = multiset_diff_count(streamed, batch)
-    if n_diff:
-        raise AssertionError(
-            f"q251: streaming VPIN buckets diverged from the fixed-volume "
-            f"batch clock on {n_diff} rows - refusing to emit either result"
-        )
+    assert_multiset_equal(
+        streamed, batch, "q251: streaming VPIN buckets vs fixed-volume batch clock"
+    )
     ws = W.partitionBy("symbol")  # bucket-summary-sized
     vol = F.col("buy_vol") + F.col("sell_vol")
     imb = F.abs(F.col("buy_vol") - F.col("sell_vol"))

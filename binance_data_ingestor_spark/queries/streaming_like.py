@@ -11,15 +11,12 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
-from .util import load, multiset_diff_count, stream_scratch
+from .util import assert_multiset_equal, load, replay_input, replay_to_memory
 
 
 # --------------------------------------------------------------------------
@@ -410,10 +407,7 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 # adversarial replays (out-of-order, multi-batch, timeout-window).
 # --------------------------------------------------------------------------
 def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import sessionize_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "value")
     sentinel = spark.sql(
@@ -432,7 +426,6 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
     )
-    work = stream_scratch("q26_")
 
     # one data micro-batch (all files at once), then the engine's own
     # trailing flush batch: after the data batch the watermark sits past
@@ -446,44 +439,12 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/in")
     )
-    # mkdtemp's basename is unique per call and [A-Za-z0-9_] — a valid
-    # view name that is DETERMINISTIC within the run (no per-process
-    # Python hash randomization).
-    name = f"out_{os.path.basename(work)}"
-    # state-store instances scale with shuffle partitions; 8 is plenty of
-    # key-parallelism for this replay and cuts per-micro-batch store
-    # setup 4x (a cluster deployment sizes this to executors, not 32)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessionize_stream(stream, watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # a partial replay would make the stream≡batch assert below
-        # compare against incomplete sessions — timeout ⇒ stop + raise
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q26 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # the checkpoint dir served only the (now terminated) replay; the
-    # memoized input dir is session-lived (atexit-cleaned); the
-    # memory-sink view must outlive this function (the returned
-    # DataFrame reads it lazily) and is driver-held rows
-    shutil.rmtree(work, ignore_errors=True)
-    # direct snapshot of the (terminated) memory sink's view — no
-    # collect→createDataFrame round-trip through the driver. The view
-    # name is unique per invocation, so later q26 runs can't collide
-    # with a result a caller is still holding; each lingering view
-    # costs one closed-sessions table (KBs) until session end.
+    # direct read of the terminated memory sink — no
+    # collect→createDataFrame round-trip
     streamed = (
-        spark.table(name)
+        replay_to_memory(
+            spark, sessionize_stream(stream, watermark="30 minutes"), "q26_"
+        )
         .filter(F.col("user_id") >= 0)
         .select(
             "user_id",
@@ -514,12 +475,9 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sess_end",
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q26: streaming sessionizer diverged from batch twin on "
-            f"{n_diff} session rows — refusing to emit either result"
-        )
+    assert_multiset_equal(
+        _cents(streamed), _cents(batch), "q26: streaming sessionizer vs batch twin"
+    )
     return batch
 
 
@@ -763,10 +721,7 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 # and out-of-order multi-batch delivery against the batch operator.
 # --------------------------------------------------------------------------
 def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.asof_enrich import asof_enrich_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -788,7 +743,6 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases.coalesce(4).write.mode("overwrite").parquet(f"{w}/r")
 
     data = replay_input(spark, sf_dir, "q191", _write)
-    work = stream_scratch("q191_")
 
     l_stream = (
         spark.readStream.schema(
@@ -804,33 +758,17 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/r")
     )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            asof_enrich_stream(
-                l_stream,
-                r_stream,
-                on="ts",
-                by="user_id",
-                value_cols=["purchase_value"],
-                watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q191 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
-    streamed = spark.table(name).filter(F.col("user_id") >= 0)
+    enriched = asof_enrich_stream(
+        l_stream,
+        r_stream,
+        on="ts",
+        by="user_id",
+        value_cols=["purchase_value"],
+        watermark="30 minutes",
+    )
+    streamed = replay_to_memory(spark, enriched, "q191_").filter(
+        F.col("user_id") >= 0
+    )
     # batch twin; one materialization feeds the multiset gate and
     # the returned result
     batch = asof_join(
@@ -854,12 +792,11 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pv"),
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q191: streaming as-of enrichment diverged from batch "
-            f"asof_join on {n_diff} rows — refusing to emit either result"
-        )
+    assert_multiset_equal(
+        _cents(streamed),
+        _cents(batch),
+        "q191: streaming as-of enrichment vs batch asof_join",
+    )
     return batch.select(
         "event_id",
         "user_id",
@@ -893,10 +830,7 @@ Q191_SQL = Q25_SQL
 # so the min_by/max_by open/close picks are tie-safe on all fixtures.
 # --------------------------------------------------------------------------
 def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.klines import klines_from_trades
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         F.col("event_type").alias("symbol"),
@@ -918,7 +852,6 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
     )
-    work = stream_scratch("q192_")
     stream = (
         spark.readStream.schema(
             "symbol string, trade_time long, price double, quantity double"
@@ -926,25 +859,9 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/in")
     )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            klines_from_trades(stream, "1h", watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q192 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
+    sink = replay_to_memory(
+        spark, klines_from_trades(stream, "1h", watermark="30 minutes"), "q192_"
+    )
 
     def _shape(df: DataFrame) -> DataFrame:
         return df.select(
@@ -958,7 +875,7 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("quote_asset_volume", 2).alias("quote_r"),
         )
 
-    streamed = _shape(spark.table(name).filter(F.col("symbol") != "__wm__"))
+    streamed = _shape(sink.filter(F.col("symbol") != "__wm__"))
     batch = _shape(klines_from_trades(ev, "1h")).localCheckpoint(eager=False)
 
     def _cents(df: DataFrame) -> DataFrame:
@@ -972,12 +889,11 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trades",
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q192: streaming kline aggregation diverged from batch twin "
-            f"on {n_diff} window rows — refusing to emit either result"
-        )
+    assert_multiset_equal(
+        _cents(streamed),
+        _cents(batch),
+        "q192: streaming kline aggregation vs batch twin",
+    )
     return batch
 
 
@@ -1014,10 +930,7 @@ GROUP BY event_type, date_trunc('hour', ts)
 # F.round on the raw emitted sums — the exact expression q22 certifies.
 # --------------------------------------------------------------------------
 def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import rolling_window_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "value"
@@ -1035,7 +948,6 @@ def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
     )
-    work = stream_scratch("q193_")
     stream = (
         spark.readStream.schema(
             "event_type string, ts timestamp, event_id long, value double"
@@ -1043,32 +955,14 @@ def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/in")
     )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rolling_window_stream(
-                stream,
-                key_col="event_type",
-                window_sec=86_400,
-                watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q193 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
+    rolling = rolling_window_stream(
+        stream,
+        key_col="event_type",
+        window_sec=86_400,
+        watermark="30 minutes",
+    )
     return (
-        spark.table(name)
+        replay_to_memory(spark, rolling, "q193_")
         .filter(F.col("key") != "__wm__")
         .select(
             "event_id",
@@ -1100,10 +994,7 @@ Q193_SQL = Q22_SQL
 # (sessionize q26, MG q187, as-of q191, tumbling q192, rolling q193).
 # --------------------------------------------------------------------------
 def q194_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import dedup_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
     doubled = ev.unionAll(ev)
@@ -1123,33 +1014,14 @@ def q194_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
     )
-    work = stream_scratch("q194_")
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, value double")
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/in")
     )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            dedup_stream(stream, ["event_id"], watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q194 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
+    deduped = dedup_stream(stream, ["event_id"], watermark="30 minutes")
     return (
-        spark.table(name)
+        replay_to_memory(spark, deduped, "q194_")
         .filter(F.col("event_id") >= 0)
         .select("event_id", "ts", F.round("value", 2).alias("value_r"))
     )
@@ -1174,10 +1046,7 @@ SELECT DISTINCT event_id, ts, round(value, 2) AS value_r FROM events
 # stateful-operator certification set.
 # --------------------------------------------------------------------------
 def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import transition_counts_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
@@ -1195,7 +1064,6 @@ def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
     )
-    work = stream_scratch("q195_")
     stream = (
         spark.readStream.schema(
             "user_id long, ts timestamp, event_id long, event_type string"
@@ -1203,27 +1071,10 @@ def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1000")
         .parquet(f"{data}/in")
     )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            transition_counts_stream(stream, watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q195 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
     trans = (
-        spark.table(name)
+        replay_to_memory(
+            spark, transition_counts_stream(stream, watermark="30 minutes"), "q195_"
+        )
         .filter(F.col("user_id") >= 0)
         .groupBy("prev_type", "event_type")
         .agg(F.count("*").alias("n"))

@@ -43,7 +43,13 @@ from ..operators.text import (
     rolling_hash_signature,
     rolling_hash_sql,
 )
-from .util import load, session_artifact, stream_scratch
+from .util import (
+    load,
+    replay_input,
+    session_artifact,
+    stagger_replay_mtimes,
+    stream_scratch,
+)
 
 _SW = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
 
@@ -2963,11 +2969,9 @@ _STALE_TEXT = "xqstalea yqstaleb zqstalec wqstaled vqstalee"
 def q259_stream_lsh_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
-    import tempfile
 
     from ..operators.dedup import _sorted_pairs, band_struct_array
     from ..streaming.dedup_ingest import run_dedup_ingest
-    from .util import replay_input, stagger_replay_mtimes
 
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
 

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,18 +125,16 @@ def stream_scratch(prefix: str) -> str:
     checkpoints at durable storage instead — this helper is the replay
     harness's scratch, not a production checkpoint policy).
     """
-    import tempfile
-
     root = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if not root:
         root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
-def multiset_diff_count(a: DataFrame, b: DataFrame) -> int:
-    """Count of distinct rows whose multiplicities differ between ``a``
-    and ``b`` — 0 iff the two frames are multiset-equal, the same
-    predicate the streaming certificates' two-``exceptAll`` gate tested.
+def assert_multiset_equal(a: DataFrame, b: DataFrame, what: str) -> None:
+    """Raise ``AssertionError`` unless ``a`` and ``b`` are multiset-equal
+    — the stream≡batch gate of every streaming certificate; ``what``
+    names the diverging pair in the message.
 
     ONE job / one shuffle instead of two jobs that each shuffle both
     sides (exceptAll plans an aggregate over each input per direction):
@@ -140,7 +143,7 @@ def multiset_diff_count(a: DataFrame, b: DataFrame) -> int:
     −0.4 s per certificate on the q26 gate (1.04 → 0.61 s min-of-3).
     """
     cols = a.columns
-    return (
+    n_diff = (
         a.withColumn("__sgn", F.lit(1))
         .unionByName(b.select(*cols).withColumn("__sgn", F.lit(-1)))
         .groupBy(*cols)
@@ -148,18 +151,106 @@ def multiset_diff_count(a: DataFrame, b: DataFrame) -> int:
         .filter(F.col("__d") != 0)
         .count()
     )
+    if n_diff:
+        raise AssertionError(
+            f"{what} diverged on {n_diff} distinct rows"
+            " - refusing to emit either result"
+        )
+
+
+# ---------------------------------------------------------------------------
+# The streaming-replay harness. Every streaming certificate runs one
+# real Structured Streaming query (file-stream source, its operator, a
+# memory sink, availableNow) and compares the sink with a batch twin;
+# everything around the query is written once here.
+# ---------------------------------------------------------------------------
+# State-store instances scale with shuffle partitions; 8 is plenty of
+# key-parallelism for a fixture replay and cuts per-micro-batch store
+# setup 4x against 32 (a cluster deployment sizes this to executors).
+REPLAY_SHUFFLE_PARTITIONS = 8
+# A partial replay would make any stream≡batch gate compare against an
+# incomplete sink, so a replay that has not drained by then fails.
+REPLAY_TIMEOUT_S = 600
+# Watermark-closed output (the last sessions, the tail VPIN bucket)
+# flushes only in the no-data micro-batch after the last file; that is
+# an ambient default, pinned so a session that disables it cannot turn
+# a certificate into a timeout.
+_REPLAY_CONF = {
+    "spark.sql.shuffle.partitions": str(REPLAY_SHUFFLE_PARTITIONS),
+    "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+}
+
+
+@contextmanager
+def _conf_scope(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` for the block; restore every key on exit, ``unset``
+    for a key that was unset before."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def replay_to_memory(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    prefix: str,
+    *,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Drain ``stream_df`` (availableNow) into a memory sink and return
+    the sink's final table.
+
+    On every exit path — success, timeout, a failing stream — the query
+    is stopped, the conf scope restored, the ``out_*`` view dropped and
+    the checkpoint scratch removed. The returned DataFrame is captured
+    before the view is dropped; it keeps reading the terminated sink's
+    in-memory rows, lazily."""
+    work = stream_scratch(prefix)
+    # mkdtemp's basename is unique per call and [A-Za-z0-9_]: a valid
+    # view name, deterministic within the run
+    name = f"out_{os.path.basename(work)}"
+    q = None
+    try:
+        with _conf_scope(spark, _REPLAY_CONF):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", f"{work}/ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(REPLAY_TIMEOUT_S):
+                raise RuntimeError(
+                    f"{name}: streaming replay timed out after "
+                    f"{REPLAY_TIMEOUT_S} s"
+                )
+        return spark.table(name)
+    finally:
+        if q is not None:
+            q.stop()
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
 # Shared replay-input artifact for the streaming certification queries
-# (q26 / q187 / q191 / q192). Each replays a fixture-derived dataset as
-# a file stream; the INPUT parquet is a pure function of (sf_dir,
-# query), so within one session it is written once and reused across
-# invocations (bench's min-of-2, repeated certification runs). The
-# CHECKPOINT is deliberately NOT shared — reusing a checkpoint would
-# RESUME from stored offsets instead of replaying. Dirs are removed at
-# process exit (atexit), mirroring the rmtree the per-invocation path
-# used to do inline.
+# (q26, q187, q191-q195, q199, q211, q225, q251, q259, q279, q289).
+# Each replays a fixture-derived dataset as a file stream; the INPUT
+# parquet is a pure function of (sf_dir, query), so within one session
+# it is written once and reused across invocations (bench's min-of-2,
+# repeated certification runs). The CHECKPOINT is deliberately NOT
+# shared — reusing a checkpoint would RESUME from stored offsets instead
+# of replaying; :func:`replay_to_memory` makes a fresh one per call.
+# Input dirs are removed at process exit (atexit).
 # ---------------------------------------------------------------------------
 def replay_input(spark: SparkSession, sf_dir: str, name: str, build) -> str:
     """Memoized work dir whose contents ``build(work_dir)`` wrote —
@@ -172,8 +263,6 @@ def replay_input(spark: SparkSession, sf_dir: str, name: str, build) -> str:
     so a cached replay dir can never be re-written without
     re-staggering.
     """
-    import atexit
-    import shutil
 
     def _build() -> str:
         work = stream_scratch(f"replay_{name}_")
@@ -200,9 +289,6 @@ def stagger_replay_mtimes(path: str) -> None:
     realistic regime: a live stream's files arrive roughly in event
     time.
     """
-    import os
-    import time
-
     parts = sorted(
         f
         for f in os.listdir(path)

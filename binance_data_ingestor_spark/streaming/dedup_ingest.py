@@ -184,11 +184,13 @@ def run_dedup_ingest(
     num_hashes: int = 8,
     bands: int = 4,
     max_files_per_trigger: int = 1,
-    timeout_sec: int = 300,
+    timeout_sec: float = 300,
 ) -> None:
     """Drain all pending input files (availableNow) through the
     dedup-on-ingest pipeline; one store partition + one dupes
-    partition per epoch."""
+    partition per epoch. Raises ``RuntimeError`` if the drain has not
+    finished after ``timeout_sec``; the query is stopped on every exit
+    path, so no epoch is still writing when this returns or raises."""
     process = make_processor(
         store_dir, dupes_dir, n=n, num_hashes=num_hashes, bands=bands
     )
@@ -201,4 +203,8 @@ def run_dedup_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise RuntimeError(f"dedup ingest timed out after {timeout_sec} s")
+    finally:
+        q.stop()

@@ -18,6 +18,11 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def temp_views(spark) -> set[str]:
+    """Names of the session's temporary views."""
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from binance_data_ingestor_spark.session import get_spark

@@ -204,3 +204,24 @@ def test_restart_processes_only_new_files(spark, ingest_dirs):
     assert {tuple(r) for r in dupes.collect()} == {
         tuple(r) for r in want.collect()
     }
+
+
+def test_timeout_raises_and_stops_query(spark, ingest_dirs):
+    docs = load(spark, SF, "documents")
+    os.makedirs(ingest_dirs["input"], exist_ok=True)
+    _write_batch(
+        spark, docs, os.path.join(ingest_dirs["input"], "a.parquet"), 1_700_000_000
+    )
+    # a 1 ms wait returns while the first epoch is still running: the
+    # caller must get an error, not a partial store, and no query may
+    # keep writing into the directories it is about to remove
+    with pytest.raises(RuntimeError, match="timed out"):
+        run_dedup_ingest(
+            spark,
+            ingest_dirs["input"],
+            ingest_dirs["store"],
+            ingest_dirs["dupes"],
+            ingest_dirs["ckpt"],
+            timeout_sec=0.001,
+        )
+    assert spark.streams.active == []

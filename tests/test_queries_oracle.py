@@ -12,7 +12,7 @@ import pytest
 
 from binance_data_ingestor_spark.queries import registry
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, temp_views
 
 QUERIES, ORACLES = registry()
 
@@ -35,8 +35,10 @@ def _norm(cols, rows):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
+    views = temp_views(spark)
     sdf = QUERIES[name](spark, SF_SMOKE)
     s_cols, s_rows = _norm(sdf.columns, [tuple(r) for r in sdf.collect()])
+    assert temp_views(spark) == views, f"{name} leaked temp views"
     if name not in ORACLES:
         assert len(s_rows) >= 0  # rows-only check (driver parity)
         return
