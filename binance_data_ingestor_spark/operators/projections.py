@@ -114,16 +114,18 @@ def normalize_trades(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) ->
 
 
 def normalize_klines(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) -> DataFrame:
-    """P5 — nested k.* flatten into 13 columns (binance-di.py:56-67)."""
+    """P5 — nested k.* flatten into 13 columns (binance-di.py:56-67).
+    A kept ``symbol`` stands in for ``k.s``: one ``symbol`` column."""
     with case_sensitive(df.sparkSession):
         m = F.col(raw)
         k = m.getField("k")
+        symbol = [] if "symbol" in keep else [k.getField("s").alias("symbol")]
         return df.select(
             *keep,
             m.getField("E").alias("event_time"),
             k.getField("t").alias("kline_start_time"),
             k.getField("T").alias("kline_close_time"),
-            k.getField("s").alias("symbol"),
+            *symbol,
             k.getField("i").alias("interval"),
             k.getField("o").alias("open_price"),
             k.getField("c").alias("close_price"),

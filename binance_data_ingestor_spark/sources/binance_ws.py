@@ -19,6 +19,11 @@ reference's dependency), which is NOT installed in this environment —
 it is import-gated and raises cleanly at connect time.  The
 ``replay_dir`` option substitutes captured fixture files for the
 network (deterministic tests, same code path through Spark).
+
+Sample cap: the ``samples`` option (the CLI's ``--samples N``) admits at
+most N frames per (stream, symbol) into the buffer — the reference's
+producers stop after N messages (binance-di.py:111-115).  Replay skips
+the extra frames; a live per-pair connection returns after its Nth.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from __future__ import annotations
 import json
 import os
 import threading
-from collections import deque
+from collections import Counter, deque
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
@@ -94,13 +99,17 @@ class BinanceWSStreamReader(SimpleDataSourceStreamReader):
         self.base_url = TESTNET_URL if options.get("testnet", "false") == "true" else PROD_URL
         self.replay_dir = options.get("replay_dir")
         self.max_frames_per_batch = int(options.get("maxFramesPerBatch", "10000"))
+        samples = options.get("samples")
+        self.samples = int(samples) if samples is not None else None
         self.buffer = _FrameBuffer()
         self._started = False
 
     # -- transport ---------------------------------------------------------
 
     def _start_replay(self) -> None:
-        """Load captured fixture frames (tests / offline development)."""
+        """Load captured fixture frames (tests / offline development),
+        at most ``samples`` per (stream, symbol)."""
+        admitted: Counter[tuple[str, str]] = Counter()
         for stream_key in self.streams:
             d = os.path.join(self.replay_dir, stream_key)
             if not os.path.isdir(d):
@@ -112,8 +121,13 @@ class BinanceWSStreamReader(SimpleDataSourceStreamReader):
                         if not line:
                             continue
                         sym = json.loads(line).get("s", self.symbols[0])
-                        if sym in self.symbols:
-                            self.buffer.put(line, stream_key, sym)
+                        if sym not in self.symbols or (
+                            self.samples is not None
+                            and admitted[stream_key, sym] >= self.samples
+                        ):
+                            continue
+                        admitted[stream_key, sym] += 1
+                        self.buffer.put(line, stream_key, sym)
 
     def _start_live(self) -> None:
         try:
@@ -130,11 +144,15 @@ class BinanceWSStreamReader(SimpleDataSourceStreamReader):
             import websockets
 
             url = stream_url(self.base_url, symbol, stream_key, self.interval)
+            received = 0
             while True:
                 try:
                     async with websockets.connect(url) as ws:
                         async for message in ws:
                             self.buffer.put(message, stream_key, symbol)
+                            received += 1
+                            if received == self.samples:
+                                return  # the reference's producer self-stop
                 except Exception:
                     await asyncio.sleep(5)  # reference reconnect backoff
 
@@ -178,7 +196,7 @@ class BinanceWSStreamReader(SimpleDataSourceStreamReader):
 
 class BinanceWebSocketDataSource(DataSource):
     """``spark.readStream.format("binance_ws").options(symbols=...,
-    streams=..., interval=..., testnet=..., replay_dir=...)``"""
+    streams=..., interval=..., testnet=..., replay_dir=..., samples=...)``"""
 
     @classmethod
     def name(cls) -> str:

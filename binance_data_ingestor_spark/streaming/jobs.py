@@ -5,12 +5,21 @@ The ingestion job is the reference's whole main program re-expressed
 union → fan-out to sinks, plus the ``--samples`` bounded-run semantics
 (L1) and the graceful flush-on-stop contract (T6, which Spark's
 micro-batch commit gives us atomically).
+
+``--samples N`` is a source-side cap: the ``binance_ws`` reader admits at
+most N frames per (stream, symbol), so the consumer never truncates.
+Each micro-batch is one cached pass — read, parsed and normalized once —
+and the sinks write that cached batch concurrently.
 """
 
 from __future__ import annotations
 
 import threading
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +45,8 @@ def build_source(spark: SparkSession, cfg: Config) -> DataFrame:
         .option("interval", cfg.interval)
         .option("testnet", str(cfg.testnet).lower())
     )
+    if cfg.samples is not None:
+        reader = reader.option("samples", cfg.samples)
     if cfg.replay_dir:
         reader = reader.option("replay_dir", cfg.replay_dir)
     return reader.load()
@@ -58,11 +69,15 @@ def normalize_multiplexed(raw: DataFrame, streams: list[str]) -> DataFrame:
 
 
 class SampleLimiter:
-    """--samples N: per-(stream, symbol) cap with self-stop (SURVEY §2.3
-    L1).  The reference's producers self-terminate at N messages
-    (binance-di.py:111-115); here the consumer truncates each micro-batch
-    against running driver-side counts and stops the query once every
-    (stream, symbol) pair reached its cap."""
+    """--samples N: per-(stream, symbol) accounting and self-stop (SURVEY
+    §2.3 L1).  The cap itself is source-side: the ``binance_ws`` reader
+    admits at most N frames per pair, as the reference's producers
+    self-terminate at N messages (binance-di.py:111-115).  ``take`` folds
+    each micro-batch's per-pair counts into ``counts`` — one job over the
+    cached batch, which also materialises the cache — and raises if a
+    pair passes its cap, which the source guarantees cannot happen; it
+    returns the batch unchanged.  Once every pair reached N,
+    ``check_done`` signals the stop thread."""
 
     def __init__(self, limit: int | None, expected_pairs: int) -> None:
         self.limit = limit
@@ -73,27 +88,17 @@ class SampleLimiter:
     def take(self, df: DataFrame) -> DataFrame:
         if self.limit is None:
             return df
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("stream", "symbol").orderBy(F.monotonically_increasing_id())
-        numbered = df.withColumn("__rn", F.row_number().over(w))
-        allowed = []
-        for (stream, symbol), n in self.batch_counts(numbered).items():
-            seen = self.counts.get((stream, symbol), 0)
-            take_n = max(0, min(n, self.limit - seen))
-            self.counts[(stream, symbol)] = seen + take_n
-            if take_n:
-                allowed.append(
-                    (F.col("stream") == stream)
-                    & (F.col("symbol") == symbol)
-                    & (F.col("__rn") <= take_n)
+        # a batch holds at most the source's maxFramesPerBatch frames, so the
+        # keys fit the driver; one job, where a groupBy would add a shuffle
+        keys = df.select("stream", "symbol").collect()
+        for pair, n in Counter(tuple(k) for k in keys).items():
+            seen = self.counts.get(pair, 0) + n
+            if seen > self.limit:
+                raise RuntimeError(
+                    f"{pair} delivered {seen} frames, over --samples {self.limit}"
                 )
-        if not allowed:
-            return numbered.filter(F.lit(False)).drop("__rn")
-        cond = allowed[0]
-        for c in allowed[1:]:
-            cond = cond | c
-        return numbered.filter(cond).drop("__rn")
+            self.counts[pair] = seen
+        return df
 
     def check_done(self) -> None:
         """Signal completion — called AFTER the batch's sinks commit, so
@@ -104,13 +109,6 @@ class SampleLimiter:
             and all(v >= self.limit for v in self.counts.values())
         ):
             self.done.set()
-
-    @staticmethod
-    def batch_counts(df: DataFrame) -> dict[tuple[str, str], int]:
-        return {
-            (r["stream"], r["symbol"]): r["n"]
-            for r in df.groupBy("stream", "symbol").agg(F.count("*").alias("n")).collect()
-        }
 
 
 def run_ingest(
@@ -123,7 +121,16 @@ def run_ingest(
     redis_client_factory=None,
 ):
     """Start the ingestion query (single foreachBatch consumer = the
-    reference's multi-format tee, S11). Returns (query, limiter)."""
+    reference's multi-format tee, S11). Returns (query, limiter).
+
+    Each micro-batch is one cached pass: the batch is persisted, the
+    limiter's count materialises it, the console sink prints it, then the
+    file and Redis sinks write it concurrently, one thread per sink,
+    under the stream's job group (``query.stop()`` cancels them too).
+    If one sink raises, the batch fails after every sink has ended; a
+    sink that finished has already written it, and the restarted query
+    replays the batch to all sinks — the same at-least-once redelivery a
+    sequential tee has."""
     wire = normalize_multiplexed(build_source(spark, cfg), cfg.streams)
     limiter = SampleLimiter(cfg.samples, len(cfg.streams) * len(cfg.symbols))
     redis_fn = (
@@ -133,16 +140,29 @@ def run_ingest(
     )
 
     def _consume(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = limiter.take(batch_df)
-        if cfg.console_enabled:
-            if cfg.silent:
-                console_sink.print_machine(batch_df, out=console_out)
-            else:
-                console_sink.print_human(batch_df, out=console_out)
-        for fmt in cfg.outputs:
-            write_batch(batch_df, cfg.output_dir, fmt)
-        if redis_fn is not None:
-            redis_fn(batch_df, epoch_id)
+        batch_df.persist()
+        try:
+            batch_df = limiter.take(batch_df)
+            if cfg.console_enabled:
+                if cfg.silent:
+                    console_sink.print_machine(batch_df, out=console_out)
+                else:
+                    console_sink.print_human(batch_df, out=console_out)
+            sinks = [partial(write_batch, batch_df, cfg.output_dir, fmt) for fmt in cfg.outputs]
+            if redis_fn is not None:
+                sinks.append(partial(redis_fn, batch_df, epoch_id))
+            if sinks:
+                # each thread gets its own copy of this thread's job group,
+                # description and tags
+                with ThreadPoolExecutor(len(sinks)) as pool:
+                    running = [
+                        pool.submit(inheritable_thread_target(batch_df.sparkSession)(s))
+                        for s in sinks
+                    ]
+                for r in running:
+                    r.result()
+        finally:
+            batch_df.unpersist()
         limiter.check_done()
 
     writer = (
